@@ -96,3 +96,27 @@ def test_known_good_fixture_schemas_take_arrow_path_zero_fallbacks(spark):
     local_df(spark, [("doc1", datetime.datetime(2024, 1, 1))],
              "document_id string, upload_date timestamp")
     assert localframe.FALLBACKS["count"] == before + 1
+
+
+def test_fallback_counter_exact_under_threads(spark):
+    """local_df runs on worker threads too (the overlap pool): N
+    fallbacks forced from a thread pool must count exactly N, with
+    ``last`` holding one whole message."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from vector_knowledge_base_spark.sources import localframe
+
+    n = 64
+    schema = "document_id string, upload_date timestamp"
+    row = [("doc1", datetime.datetime(2024, 1, 1))]
+    before = localframe.FALLBACKS["count"]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # switch threads as often as possible
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            list(pool.map(lambda _: local_df(spark, row, schema), range(n)))
+    finally:
+        sys.setswitchinterval(interval)
+    assert localframe.FALLBACKS["count"] == before + n
+    assert localframe.FALLBACKS["last"].startswith("TypeError: ")

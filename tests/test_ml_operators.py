@@ -771,6 +771,39 @@ def test_opq_beats_pq_on_anisotropic(spark):
     assert axis_var.max() / axis_var.min() < 20.0  # skew hidden from axes
 
 
+def test_limit_prefix_stable_on_materialized_frame(spark):
+    """``pq_opq_recall_curve`` collects ONE ``limit()`` sample and
+    slices it for every consumer (``train_full[:4096]``), which is
+    value-identical to per-consumer collects only if ``limit()`` on a
+    materialized frame returns the same partition-order prefix every
+    time. Pinned: two collects of the same limit are byte-identical,
+    and a shorter limit is a prefix of a longer one — across several
+    partitions."""
+    import numpy as np
+
+    from vector_knowledge_base_spark.operators.ann import (
+        anisotropic_embeddings,
+    )
+
+    ids = spark.range(0, 400, numPartitions=4).select(
+        F.col("id").alias("vec_id")
+    )
+    emb = anisotropic_embeddings(ids).localCheckpoint(eager=True)
+    assert emb.rdd.getNumPartitions() > 1
+
+    def sample(n):
+        return np.array(
+            emb.select("embedding").limit(n).toPandas()["embedding"].tolist(),
+            dtype=np.float64,
+        )
+
+    a, b = sample(250), sample(250)
+    assert a.shape == (250, b.shape[1])
+    assert a.tobytes() == b.tobytes()
+    short = sample(120)
+    assert short.tobytes() == a[:120].tobytes()
+
+
 def test_ivf_batch_topk_matches_single_loop_and_exact(spark, emb):
     """r14: the batched IVF plan must answer every query exactly like
     the per-query ivf_topk loop at the SAME n_probe (same probe rule,

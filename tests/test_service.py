@@ -537,10 +537,10 @@ def test_search_serve_mode_parity_and_freshness(spark, tmp_path):
     art3 = kb._serve_artifact()
     assert art3 is not art1  # new version → new artifact
     # an append-only advance took the DELTA path (r10: refresh ∝ churn
-    # — only the added files were read, no KMeans retrain), and the
-    # OLD artifact stayed internally consistent (its own server
-    # snapshot + payload — a search that grabbed it mid-refresh
-    # completes coherently)
+    # — only the added files were read, new rows joined the serve
+    # artifact's one cell), and the OLD artifact stayed internally
+    # consistent (its own server snapshot + payload — a search that
+    # grabbed it mid-refresh completes coherently)
     assert art3["server"].last_refresh_mode == "delta"
     assert art1["server"].table_version == art1["version"]
     # parity still holds on the grown corpus
@@ -626,6 +626,58 @@ def test_serve_artifact_refuses_over_bound_before_any_collect(
     assert isinstance(art["payload"], pd.DataFrame)
 
 
+def _plan_rrf(chunks, term, qv, k, N=1000):
+    """The ``hybrid_search_rrf`` batch-plan shape over ``chunks`` for a
+    one-term query: prune-first top-N per side by (-score, id), a
+    missing rank coalesced to N+1, 6-digit rounding, (-rrf, id) ties."""
+    from pyspark.sql import Window
+
+    from vector_knowledge_base_spark.functions.vector import dot_product
+
+    tf = F.size(
+        F.filter(F.split("text", " "), lambda t: t == F.lit(term))
+    )
+    kw = (
+        chunks.select("chunk_id", tf.alias("tf"))
+        .orderBy(F.desc("tf"), F.asc("chunk_id"))
+        .limit(N)
+        .select(
+            "chunk_id",
+            F.row_number()
+            .over(Window.orderBy(F.desc("tf"), F.asc("chunk_id")))
+            .alias("rk"),
+        )
+    )
+    qcol = F.array(*[F.lit(float(x)) for x in qv])
+    vec = (
+        chunks.select(
+            "chunk_id", dot_product(F.col("embedding"), qcol).alias("s")
+        )
+        .orderBy(F.desc("s"), F.asc("chunk_id"))
+        .limit(N)
+        .select(
+            "chunk_id",
+            F.row_number()
+            .over(Window.orderBy(F.desc("s"), F.asc("chunk_id")))
+            .alias("rv"),
+        )
+    )
+    fused = (
+        kw.join(vec, "chunk_id", "full_outer")
+        .select(
+            "chunk_id",
+            F.round(
+                1.0 / (60 + F.coalesce(F.col("rk"), F.lit(N + 1)))
+                + 1.0 / (60 + F.coalesce(F.col("rv"), F.lit(N + 1))),
+                6,
+            ).alias("rrf_score"),
+        )
+        .orderBy(F.desc("rrf_score"), F.asc("chunk_id"))
+        .limit(k)
+    )
+    return [(r["chunk_id"], r["rrf_score"]) for r in fused.collect()]
+
+
 def test_search_hybrid_facade_parity_freshness_filters(spark, tmp_path):
     """r11 (VERDICT r10 Missing #3): the hybrid regime through the
     service surface. Pinned: (a) search_hybrid's fused top-k EQUALS
@@ -635,9 +687,6 @@ def test_search_hybrid_facade_parity_freshness_filters(spark, tmp_path):
     freshness with the artifact taking the DELTA path on an
     append-only advance; (c) the DSL pre-filter restricts BOTH
     rankings (exact filtered hybrid); (d) parquet storage refuses."""
-    from pyspark.sql import Window
-
-    from vector_knowledge_base_spark.functions.vector import dot_product
     from vector_knowledge_base_spark.pipeline.embed import embed_texts
 
     kb = KnowledgeBase(spark, str(tmp_path / "ws"), storage="txlog")
@@ -653,57 +702,12 @@ def test_search_hybrid_facade_parity_freshness_filters(spark, tmp_path):
         "ml.txt", "vector embeddings cluster tomato-free notes", category="eng"
     )
 
-    def plan_rrf(term, qv, k, N=1000):
-        chunks = kb.chunks()
-        tf = F.size(
-            F.filter(F.split("text", " "), lambda t: t == F.lit(term))
-        )
-        kw = (
-            chunks.select("chunk_id", tf.alias("tf"))
-            .orderBy(F.desc("tf"), F.asc("chunk_id"))
-            .limit(N)
-            .select(
-                "chunk_id",
-                F.row_number()
-                .over(Window.orderBy(F.desc("tf"), F.asc("chunk_id")))
-                .alias("rk"),
-            )
-        )
-        qcol = F.array(*[F.lit(float(x)) for x in qv])
-        vec = (
-            chunks.select(
-                "chunk_id", dot_product(F.col("embedding"), qcol).alias("s")
-            )
-            .orderBy(F.desc("s"), F.asc("chunk_id"))
-            .limit(N)
-            .select(
-                "chunk_id",
-                F.row_number()
-                .over(Window.orderBy(F.desc("s"), F.asc("chunk_id")))
-                .alias("rv"),
-            )
-        )
-        fused = (
-            kw.join(vec, "chunk_id", "full_outer")
-            .select(
-                "chunk_id",
-                F.round(
-                    1.0 / (60 + F.coalesce(F.col("rk"), F.lit(N + 1)))
-                    + 1.0 / (60 + F.coalesce(F.col("rv"), F.lit(N + 1))),
-                    6,
-                ).alias("rrf_score"),
-            )
-            .orderBy(F.desc("rrf_score"), F.asc("chunk_id"))
-            .limit(k)
-        )
-        return [(r["chunk_id"], r["rrf_score"]) for r in fused.collect()]
-
     # (a) parity with the batch-plan shape on the same corpus
     term = "vector"
     qv = embed_texts([term], dim=kb.dim)[0].tolist()
     got = kb.search_hybrid(term, k=5)
-    assert [(h["chunk_id"], h["rrf_score"]) for h in got] == plan_rrf(
-        term, qv, 5
+    assert [(h["chunk_id"], h["rrf_score"]) for h in got] == _plan_rrf(
+        kb.chunks(), term, qv, 5
     )
     assert all(
         set(h) == {"chunk_id", "rrf_score", "text", "filename", "chunk_index"}
@@ -721,8 +725,8 @@ def test_search_hybrid_facade_parity_freshness_filters(spark, tmp_path):
     art2 = kb._hybrid_artifact()[1]
     assert art2.table_version > v1
     assert art2.last_refresh_mode == "delta"
-    assert [(h["chunk_id"], h["rrf_score"]) for h in got2] == plan_rrf(
-        "vector", qv, 6
+    assert [(h["chunk_id"], h["rrf_score"]) for h in got2] == _plan_rrf(
+        kb.chunks(), "vector", qv, 6
     )
 
     # (c) filtered: only food-category chunks are rankable — ranks are
@@ -742,6 +746,94 @@ def test_search_hybrid_facade_parity_freshness_filters(spark, tmp_path):
     kb2 = KnowledgeBase(spark, str(tmp_path / "ws2"), storage="parquet")
     with pytest.raises(RuntimeError, match="txlog"):
         kb2.search_hybrid("anything")
+
+
+def test_serve_artifact_is_one_cell_without_kmeans(
+    spark, tmp_path, monkeypatch
+):
+    """The facade's serve artifact is an exact one-cell shard: a full
+    build, an append-only delta and a rewriting delete all serve
+    without any KMeans fit. After each step ``search_hits`` and
+    ``search_batch`` equal ``search(mode="spark")`` and
+    ``search_hybrid`` equals the hybrid batch-plan shape, unfiltered
+    and under a ``category`` filter; the append takes the delta path
+    and a deleted file is never returned."""
+    from pyspark.ml.clustering import KMeans
+
+    from vector_knowledge_base_spark.pipeline.embed import embed_texts
+
+    def no_fit(self, *args, **kwargs):
+        raise AssertionError("KMeans.fit ran for the facade serve artifact")
+
+    kb = KnowledgeBase(spark, str(tmp_path / "ws"), storage="txlog")
+    kb.create_document(
+        "spark.txt", "vector search spark broadcast join", category="eng"
+    )
+    kb.create_document(
+        "cooking.md", "tomato basil pasta garlic vector oil", category="food"
+    )
+    kb.create_document(
+        "ml.txt", "vector embeddings cluster notes tomato", category="eng"
+    )
+    kb.create_document(
+        "soup.md", "tomato soup basil vector garnish", category="food"
+    )
+    monkeypatch.setattr(KMeans, "fit", no_fit)
+
+    queries = ["vector broadcast", "tomato basil", "garlic oil"]
+    terms = ["vector", "tomato"]
+    food = {"category": "food"}
+
+    def spark_hits(q, f):
+        rows = kb.search(q, k=3, filters=f, mode="spark").collect()
+        return sorted(
+            (
+                (r.chunk_id, r.score, r.text, r.filename, r.chunk_index)
+                for r in rows
+            ),
+            key=lambda t: (-t[1], t[0]),
+        )
+
+    def check_parity():
+        seen = set()
+        for f in (None, food):
+            want = [spark_hits(q, f) for q in queries]
+            got = [
+                [tuple(h.values()) for h in kb.search_hits(q, k=3, filters=f)]
+                for q in queries
+            ]
+            assert got == want
+            batch = kb.search_batch(queries, k=3, filters=f)
+            assert [[tuple(h.values()) for h in b] for b in batch] == want
+            corpus = kb.chunks()
+            if f:
+                corpus = corpus.where(F.col("category") == f["category"])
+            for t in terms:
+                qv = embed_texts([t], dim=kb.dim)[0].tolist()
+                hyb = kb.search_hybrid(t, k=4, filters=f)
+                assert [
+                    (h["chunk_id"], h["rrf_score"]) for h in hyb
+                ] == _plan_rrf(corpus, t, qv, 4)
+                seen |= {h["filename"] for h in hyb}
+            seen |= {h[3] for hits in want for h in hits}
+        return seen
+
+    # build
+    assert "cooking.md" in check_parity()
+    art = kb._serve_artifact()
+    assert art["server"].centroids.shape[0] == 1
+
+    # append-only advance: the delta path extends the one cell
+    kb.create_document(
+        "garden.md", "tomato garden soil vector basil", category="food"
+    )
+    assert "garden.md" in check_parity()
+    assert kb._serve_artifact()["server"].last_refresh_mode == "delta"
+
+    # rewriting commit: a full one-cell rebuild, the file is gone
+    kb.delete_document("cooking.md")
+    assert "cooking.md" not in check_parity()
+    assert kb._serve_artifact()["server"].centroids.shape[0] == 1
 
 
 def test_facade_chunks_table_bloom_indexed(spark, tmp_path):

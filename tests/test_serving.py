@@ -1482,6 +1482,30 @@ def test_keyword_build_refuses_duplicate_ids(spark):
         _build_keyword_arrays(docs, "doc_id", "text")
 
 
+def test_keyword_build_refuses_null_ids(spark):
+    """A null doc id has no place in the ascending-id rank map: the
+    hybrid build must refuse it with an explicit error worded like the
+    duplicate-id refusal, not crash inside the driver-side sort."""
+    from vector_knowledge_base_spark.operators.serving import (
+        HybridKnnServer,
+    )
+
+    knn = KnnServer(
+        [[0.0, 0.0]],
+        spark.createDataFrame(
+            [("a", [1.0, 0.0], 0), ("b", [0.0, 1.0], 0)],
+            "chunk_id string, embedding array<double>, ivf_cell int",
+        ),
+        id_col="chunk_id",
+    )
+    docs = spark.createDataFrame(
+        [("a", "alpha beta"), (None, "beta gamma"), ("b", "gamma delta")],
+        "chunk_id string, text string",
+    )
+    with pytest.raises(ValueError, match="null ids in the corpus"):
+        HybridKnnServer(docs, knn, id_col="chunk_id")
+
+
 def test_allowed_ids_mask_cache_hits_and_stays_exact(spark, emb, server):
     """r14 (VERDICT r13 next-round #4): a repeated-filter session must
     reuse the memoized allow mask — same snapshot, same filter content

@@ -565,7 +565,8 @@ class KnnServer:
     ) -> "KnnServer":
         """Build from an already-assembled ``_Snapshot`` — the Arrow
         sharded-build seam (r15): the sharded builders collect ONE
-        Arrow table and slice it per shard into snapshots driver-side.
+        Arrow table and slice it per shard into snapshots driver-side;
+        the facade's one-cell serve artifact wraps its collect here too.
         Same bound refusal as ``_from_rows``."""
         srv = cls.__new__(cls)
         srv.id_col = id_col
@@ -1978,6 +1979,14 @@ def _keyword_arrays_from_rows(dl_rows, posting_rows):
     sort moved driver-side (the dl frame is no longer distributed-
     sorted); sorting already-sorted input is a no-op, so pre-r15
     callers are unaffected."""
+    n_null = sum(1 for r in dl_rows if r["_id"] is None)
+    if n_null:
+        raise ValueError(
+            "keyword artifact build: null ids in the corpus "
+            f"({len(dl_rows)} rows, {n_null} with a null id) — every "
+            "row needs an id for the id→row-index map (ids are the "
+            "upsert key; drop or fix the null-id rows upstream)"
+        )
     dl_rows = sorted(dl_rows, key=lambda r: r["_id"])
     doc_ids = [r["_id"] for r in dl_rows]
     dl = [r["_dl"] for r in dl_rows]

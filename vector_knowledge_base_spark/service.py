@@ -486,17 +486,18 @@ class _KnowledgeBaseCore:
 
     def _serve_artifact(self) -> dict:
         """The cached serve-mode artifact: an exact in-process
-        ``KnnServer`` over the chunks table PLUS the driver-held
-        payload frame the filters and hit projection read — both built
-        from ONE pinned txlog version and swapped as one dict
-        reference, so a search never pairs new vectors with old
-        payloads (the same atomicity contract as the server's own
-        ``refresh_if_stale``, widened to cover the payload; the
-        freshness check itself is one manifest listing, no Spark
-        job)."""
-        from vector_knowledge_base_spark.operators.ann import build_ivf
+        ``KnnServer`` PLUS the driver-held payload frame the filters
+        and hit projection read, both built from ONE pinned txlog
+        version and swapped as one dict reference, so a search never
+        pairs new vectors with old payloads (the freshness check is one
+        manifest listing, no Spark job). The vector half is an exact
+        shard with ONE cell, not an IVF index: every facade query
+        probes all cells, and per-row scores with id tie-breaks do not
+        depend on row order, so trained cells would buy nothing. A
+        build is one Arrow collect with no KMeans fit."""
         from vector_knowledge_base_spark.operators.serving import (
             KnnServer,
+            _collect_float_snapshot,
             append_only_batches,
         )
         from vector_knowledge_base_spark.sources.txlog import (
@@ -534,8 +535,8 @@ class _KnowledgeBaseCore:
                     "it, or stay on mode='spark' for this corpus."
                 )
         # delta path (refresh ∝ churn): append-only advances read ONLY
-        # the added files — server rows assign to existing centroids,
-        # payload rows concat — and the (server, payload) pair still
+        # the added files — server rows join the one cell, payload
+        # rows concat — and the (server, payload) pair still
         # swaps as one dict pinned to one version
         if art is not None and art["server"] is not None:
             batches = append_only_batches(
@@ -583,25 +584,21 @@ class _KnowledgeBaseCore:
             if c not in ("embedding", "extractor_meta")
         ]
         payload = chunks.select(*payload_cols).toPandas()
-        n = len(payload)
         server = None
-        if n > 0:
-            centroids, assigned = build_ivf(
-                chunks,
-                n_partitions=max(1, min(8, n)),
-                id_col="chunk_id",
-                vec_col="embedding",
+        if len(payload) > 0:
+            one_cell = chunks.select("chunk_id", "embedding").withColumn(
+                "ivf_cell", F.lit(0)
             )
-            server = KnnServer(
-                centroids,
-                assigned,
+            snap = _collect_float_snapshot(
+                [[0.0] * self.dim], one_cell, "chunk_id", "embedding", latest
+            )
+            server = KnnServer._from_snapshot(
+                snap,
                 id_col="chunk_id",
                 vec_col="embedding",
                 max_vectors=self.serve_max_rows,
-                _table_version=latest,
                 _table_path=self.chunks_path,
             )
-            assigned.unpersist()
         art = {
             "version": latest,
             "server": server,

@@ -24,6 +24,8 @@ once from the JVM, instead of re-running a Python stage per action.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 
 # schema-string → (StructType, [pyarrow types]) — parsing DDL and
@@ -39,6 +41,9 @@ _SCHEMA_CACHE: dict[str, tuple] = {}
 # a regression to the pickled path fails loudly in CI instead of
 # showing up as a mystery slowdown.
 FALLBACKS: dict = {"count": 0, "last": None}
+# local_df runs on the overlap pool's threads too; the read-modify-write
+# of the counter and the paired "last" write must not interleave
+_FALLBACKS_LOCK = threading.Lock()
 
 
 def _arrow_fields(schema):
@@ -134,8 +139,9 @@ def local_df(spark: SparkSession, data, schema=None) -> DataFrame:
     try:
         return _arrow_local_df(spark, data, schema)
     except Exception as e:  # noqa: BLE001 — fall back to the legacy path
-        FALLBACKS["count"] += 1
-        FALLBACKS["last"] = f"{type(e).__name__}: {str(e)[:200]}"
+        with _FALLBACKS_LOCK:
+            FALLBACKS["count"] += 1
+            FALLBACKS["last"] = f"{type(e).__name__}: {str(e)[:200]}"
         if schema is None:
             return spark.createDataFrame(data)
         return spark.createDataFrame(data, schema)
