@@ -136,3 +136,74 @@ def test_chunk_documents_df_on_testdata(spark):
     agg = chunks.groupBy("doc_id").count().collect()
     assert len(agg) == docs.count()  # every doc chunked
     assert chunks.where("token_count > 500").count() == 0
+
+
+def test_chunker_carries_document_columns_to_every_chunk(spark):
+    """Columns other than id/text/lang ride through the chunker: every
+    chunk row of a multi-chunk document carries that document's values
+    (a string and a map column here), after the chunk fields. Documents
+    with no chunks add no rows and shift no other document's values;
+    40 documents over the session's partitions put several in each
+    Arrow batch."""
+    sent = "Sentence number {} about tokens."
+    rows = []
+    for i in range(40):
+        text = "" if i % 9 == 4 else " ".join(
+            sent.format(j) for j in range(1 + (i * 7) % 30)
+        )
+        meta = None if i % 5 == 3 else {"i": str(i), "pages": str(i % 4)}
+        rows.append((i, text, "txt" if i % 2 else "md", f"d{i}.txt", meta))
+    docs = spark.createDataFrame(
+        rows,
+        "doc_id long, text string, lang string, filename string, "
+        "extractor_meta map<string,string>",
+    )
+    chunks = chunk_documents_df(docs, chunk_size=40, chunk_overlap=5)
+    assert chunks.columns == [
+        "doc_id", "chunk_index", "total_chunks", "text", "token_count",
+        "filename", "extractor_meta",
+    ]
+    want = {i: (name, meta) for i, _, _, name, meta in rows}
+    per_doc = {}
+    for r in chunks.collect():
+        assert (r.filename, r.extractor_meta) == want[r.doc_id]
+        per_doc[r.doc_id] = per_doc.get(r.doc_id, 0) + 1
+    assert set(per_doc) == {i for i, text, *_ in rows if text}
+    assert max(per_doc.values()) > 1
+    # the chunk fields are those of the id/text/lang-only chunker
+    bare = chunk_documents_df(
+        docs.select("doc_id", "text", "lang"), chunk_size=40, chunk_overlap=5
+    )
+    key = ["doc_id", "chunk_index", "total_chunks", "text", "token_count"]
+    assert sorted(tuple(r) for r in chunks.select(*key).collect()) == sorted(
+        tuple(r) for r in bare.collect()
+    )
+
+
+def test_ingest_sources_broadcast_no_document_frame(spark, fixture_dir, tmp_path):
+    """Scale guard: document metadata reaches the chunk rows through the
+    chunker, not through a broadcast join of the document frame (which
+    would ship every document's filename to every executor)."""
+    import json
+
+    from vector_knowledge_base_spark.sources.inline import (
+        create_document,
+        ingest_jsonl,
+    )
+
+    jl = tmp_path / "docs.jsonl"
+    jl.write_text(
+        "\n".join(
+            json.dumps({"filename": f"f{i}.txt", "text": f"Doc {i} text."})
+            for i in range(3)
+        )
+    )
+    frames = {
+        "ingest_jsonl": ingest_jsonl(spark, str(jl)),
+        "create_document": create_document(spark, "n.txt", "One. Two."),
+        "ingest_directory": ingest_directory(spark, fixture_dir),
+    }
+    for name, df in frames.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastExchange" not in plan, (name, plan)
+        assert df.count() > 0, name

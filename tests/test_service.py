@@ -4,6 +4,7 @@ cluster, 3-D, export, delete, reset."""
 
 from __future__ import annotations
 
+import os
 import zipfile
 
 import pytest
@@ -1436,3 +1437,88 @@ def test_facade_search_keyword_batch_parity(spark, tmp_path):
     pq = KnowledgeBase(spark, str(tmp_path / "pq"), storage="parquet")
     with pytest.raises(RuntimeError, match="search_keyword_batch requires"):
         pq.search_keyword_batch(["x"])
+
+
+def test_txlog_listing_empty_before_ingest_and_after_reset(spark, tmp_path):
+    """txlog storage keeps no parquet registry, so a fresh workspace has
+    nothing on disk to list. The listing must still be an empty frame
+    with the populated listing's schema, and be empty again after
+    ``reset``."""
+    kb = KnowledgeBase(spark, str(tmp_path / "ws"), storage="txlog")
+    fresh = kb.list_documents()
+    assert fresh.count() == 0
+    kb.create_document("a.txt", "alpha bravo charlie. Delta echo.")
+    populated = kb.list_documents()
+    assert [r.filename for r in populated.collect()] == ["a.txt"]
+    assert fresh.schema == populated.schema
+    assert not os.path.exists(str(tmp_path / "ws" / "registry"))
+    kb.reset()
+    after = kb.list_documents()
+    assert after.count() == 0
+    assert after.schema == populated.schema
+
+
+def test_txlog_ingest_dispatch_pin(spark, tmp_path):
+    """A txlog import runs each stage once: scan, chunk+embed inside the
+    write job, one bloom pass, and no cached count or registry upsert.
+    Pinned as Spark jobs per call: 5 on a fresh table and 5 per
+    append, with one job of slack in the bound."""
+    import json
+    import uuid
+
+    sc = spark.sparkContext
+    words = [f"w{i}" for i in range(50)]
+
+    def _write(path, lo, hi):
+        with open(path, "w") as fh:
+            for i in range(lo, hi):
+                sents = [
+                    " ".join(words[(i * 7 + j * 3 + t) % 50] for t in range(9))
+                    .capitalize() + "."
+                    for j in range(1 + i % 60)
+                ]
+                fh.write(json.dumps(
+                    {"filename": f"d{i}.txt", "text": " ".join(sents)}
+                ) + "\n")
+
+    _write(str(tmp_path / "a.jsonl"), 0, 40)
+    _write(str(tmp_path / "b.jsonl"), 40, 48)
+    kb = KnowledgeBase(spark, str(tmp_path / "ws"), storage="txlog")
+    counts, rows = [], []
+    try:
+        for name, kw in (("a", {}), ("b", {"category": "x"})):
+            group = f"ingest-{uuid.uuid4().hex}"
+            sc.setJobGroup(group, group)
+            rows.append(kb.import_jsonl(str(tmp_path / f"{name}.jsonl"), **kw))
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert counts[0] <= 6 and counts[1] <= 6, counts
+    # the returned counts are the committed rows, read from footer stats
+    assert rows[0] + rows[1] == kb.chunks().count()
+    assert rows[1] == kb.chunks().where(F.col("category") == "x").count()
+    assert kb.list_documents().count() == 48
+
+
+def test_txlog_append_under_check_constraint(spark, tmp_path):
+    """With CHECK constraints on the chunks table the facade still
+    validates every batch before committing it: a passing batch commits
+    and reports its row count, a violating one is refused whole."""
+    from vector_knowledge_base_spark.sources.txlog import (
+        TxConstraintViolation,
+        add_constraint,
+    )
+
+    kb = KnowledgeBase(spark, str(tmp_path / "ws"), storage="txlog")
+    kb.create_document("a.txt", "alpha bravo. Charlie delta.")
+    add_constraint(spark, kb.chunks_path, "short_name", "length(filename) < 8")
+    add_constraint(
+        spark, kb.chunks_path, "stamped", "upload_date <= current_timestamp()"
+    )
+    assert kb.create_document("b.txt", "echo foxtrot. Golf hotel.") == 1
+    with pytest.raises(TxConstraintViolation, match="short_name"):
+        kb.create_document("too_long.txt", "india juliet. Kilo lima.")
+    assert sorted(r.filename for r in kb.chunks().collect()) == [
+        "a.txt", "b.txt",
+    ]

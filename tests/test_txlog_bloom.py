@@ -447,3 +447,67 @@ def test_all_null_column_file_abstains_never_zero_bloom(spark, tmp_path):
     # probing the null column abstains (file kept, read exact)
     assert read_table(spark, tbl, filters={"name": "x"}).count() == 0
     assert read_table(spark, tbl, filters={"k": 7}).count() == 1
+
+
+def _sidecars(files):
+    out = {}
+    for f in files:
+        side = f + ".bloom.json"
+        if os.path.exists(side):
+            with open(side) as fh:
+                out[f] = fh.read()
+            os.remove(side)
+    return out
+
+
+@pytest.mark.parametrize("partitioned", [False, True])
+def test_multi_column_bloom_build_equals_per_column_builds(
+    spark, tmp_path, partitioned
+):
+    """The bloom build makes one pass over all declared columns. Its
+    sidecars and per-file ``bloom`` flags must equal those of building
+    each column alone: string, long and int columns, an all-NULL column
+    (never written as an all-zero bloom), on plain and partitioned
+    tables."""
+    import json as _json
+
+    from vector_knowledge_base_spark.sources.txlog import (
+        _attach_blooms,
+        _manifest_files,
+    )
+
+    tbl = str(tmp_path / "t")
+    df = spark.range(0, 900).select(
+        F.concat(F.lit("s"), F.col("id")).alias("name"),
+        (F.col("id") * 1_000_003).alias("big"),
+        (F.col("id") % 97).cast("int").alias("small"),
+        F.lit(None).cast("string").alias("nothing"),
+        (F.col("id") % 3).alias("part"),
+    ).repartition(3)
+    create_table(spark, tbl, df, partition_by=["part"] if partitioned else None)
+    m = _read_manifest(tbl, 0)
+    files = _manifest_files(tbl, m)
+    assert len(files) == (9 if partitioned else 3)  # 3 tasks x 3 parts
+    cols = ["name", "big", "small", "nothing"]
+
+    together = copy.deepcopy(m["stats"])
+    _attach_blooms(spark, tbl, files, together, cols)
+    multi = _sidecars(files)
+
+    alone = {}
+    flags = {e: [] for e in m["stats"]}
+    for c in cols:
+        st = copy.deepcopy(m["stats"])
+        _attach_blooms(spark, tbl, files, st, [c])
+        for f, text in _sidecars(files).items():
+            alone.setdefault(f, {}).update(_json.loads(text))
+        for e, s in st.items():
+            flags[e] += s.get("bloom", [])
+
+    assert set(multi) == set(files)
+    for f in files:
+        assert multi[f] == _json.dumps(alone[f])  # byte-identical sidecar
+        assert list(_json.loads(multi[f])) == ["name", "big", "small"]
+    for e in m["stats"]:
+        assert together[e]["bloom"] == sorted(flags[e])
+        assert "nothing" not in together[e]["bloom"]

@@ -192,6 +192,20 @@ CHUNK_SCHEMA = T.StructType(
 )
 
 
+def _spread(df: DataFrame) -> DataFrame:
+    """Spread a dense (e.g. single-file) input across the workers before
+    a Python stage. Streams pass through: ``.rdd`` is illegal on them,
+    and their source already partitions them. On a frame whose plan ends
+    in a shuffle, the partition-count probe runs that shuffle under AQE,
+    so call this only on scan-shaped inputs."""
+    if df.isStreaming:
+        return df
+    par = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < par:
+        return df.repartition(par)
+    return df
+
+
 def chunk_documents_df(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -201,31 +215,46 @@ def chunk_documents_df(
     chunk_overlap: int = CHUNK_OVERLAP,
 ) -> DataFrame:
     """Distributed chunking: one doc row in → N chunk rows out, via
-    mapInPandas (UDTF shape, SURVEY §2.11 family 2)."""
+    mapInPandas (UDTF shape, SURVEY §2.11 family 2).
+
+    Every other column of ``docs`` (all but the id, text and language
+    columns, and any named like a chunk field) is carried through to
+    each of the document's chunk rows, after the chunk fields. Document
+    metadata therefore needs no join back onto the chunks. The output
+    keeps the spread input's partition count, so it can be embedded
+    without another spread."""
     import pandas as pd
 
+    consumed = {id_col, text_col, lang_col}
+    extra = [
+        f
+        for f in docs.schema.fields
+        if f.name not in consumed and f.name not in CHUNK_SCHEMA.names
+    ]
+    extra_names = [f.name for f in extra]
     cols = [id_col, text_col] + ([lang_col] if lang_col else [])
-    # spread a dense single-file input before the Python fan-out stage
-    # (.rdd is illegal on streaming DataFrames — streams are already
-    # partitioned by their source)
-    if not docs.isStreaming:
-        par = docs.sparkSession.sparkContext.defaultParallelism
-        if docs.rdd.getNumPartitions() < par:
-            docs = docs.repartition(par)
+    docs = _spread(docs.select(*cols, *extra_names))
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in batches:
-            out = {k: [] for k in ("doc_id", "chunk_index", "total_chunks", "text", "token_count")}
-            for row in pdf.itertuples(index=False):
-                text = getattr(row, text_col)
-                lang = getattr(row, lang_col) if lang_col else None
+            out = {k: [] for k in CHUNK_SCHEMA.names}
+            src: list[int] = []
+            langs = pdf[lang_col] if lang_col else [None] * len(pdf)
+            for i, (doc_id, text, lang) in enumerate(
+                zip(pdf[id_col], pdf[text_col], langs)
+            ):
                 chunks = chunk_document(text, lang, chunk_size, chunk_overlap)
                 for c in chunks:
-                    out["doc_id"].append(getattr(row, id_col))
+                    out["doc_id"].append(doc_id)
                     out["chunk_index"].append(c["chunk_index"])
                     out["total_chunks"].append(len(chunks))
                     out["text"].append(c["text"])
                     out["token_count"].append(c["token_count"])
-            yield pd.DataFrame(out)
+                src.extend([i] * len(chunks))
+            frame = pd.DataFrame(out)
+            if extra_names:
+                carried = pdf[extra_names].take(src).reset_index(drop=True)
+                frame = pd.concat([frame, carried], axis=1)
+            yield frame
 
-    return docs.select(*cols).mapInPandas(run, schema=CHUNK_SCHEMA)
+    return docs.mapInPandas(run, schema=T.StructType(CHUNK_SCHEMA.fields + extra))

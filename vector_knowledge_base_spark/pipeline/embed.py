@@ -28,6 +28,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from vector_knowledge_base_spark.pipeline.chunker import _spread
+
 DEFAULT_DIM = 64  # matches the synthetic embeddings fixture; 768 for mpnet
 
 _MODEL_CACHE: dict = {}
@@ -85,15 +87,27 @@ def embed_df(
     cached real model) encodes the whole batch in one call — the
     distributed equivalent of the reference's corpus-wide
     ``embed_batch_async`` (/root/reference/backend/main.py:437-440).
-    """
-    import pandas as pd
 
-    # spread a dense single-file input across workers before the
-    # Python-side encode stage (skip for streams: .rdd is illegal there)
-    if not df.isStreaming:
-        par = df.sparkSession.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < par:
-            df = df.repartition(par)
+    A dense input is spread across the workers first. The ingest
+    sources embed ``chunk_documents_df`` output, which is already
+    spread, through ``_embed_column`` instead: probing the partition
+    count of that frame would run the chunker's shuffle as a job of its
+    own."""
+    return _embed_column(
+        _spread(df), text_col, output_col, dim, model_name, precision
+    )
+
+
+def _embed_column(
+    df: DataFrame,
+    text_col: str = "text",
+    output_col: str = "embedding",
+    dim: int = DEFAULT_DIM,
+    model_name: str = "hashed",
+    precision: str = "float32",
+) -> DataFrame:
+    """``embed_df`` without the spread: the UDF column alone."""
+    import pandas as pd
 
     np_type = np.float32 if precision == "float32" else np.float64
     spark_type = T.FloatType() if precision == "float32" else T.DoubleType()

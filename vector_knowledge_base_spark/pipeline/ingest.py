@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from vector_knowledge_base_spark.functions.text import sanitize_filename
 from vector_knowledge_base_spark.pipeline.chunker import chunk_documents_df
-from vector_knowledge_base_spark.pipeline.embed import embed_df
+from vector_knowledge_base_spark.pipeline.embed import _embed_column
 from vector_knowledge_base_spark.pipeline.extract import extract_files_df, read_binary_files
 
 
@@ -45,16 +45,14 @@ def ingest_directory(
     docs = ok.select(
         F.abs(F.xxhash64("path")).alias("doc_id"),
         sanitize_filename(F.col("filename")).alias("filename"),
-        F.col("extension"),
         F.col("text"),
         F.regexp_replace("extension", r"^\.", "").alias("lang"),
         F.col("extractor_meta"),
     )
 
-    chunks = chunk_documents_df(docs, id_col="doc_id", text_col="text", lang_col="lang")
-    chunks = embed_df(chunks, text_col="text", dim=embedding_dim)
-    meta = docs.select("doc_id", "filename", "extension", "extractor_meta")
-    out = chunks.join(F.broadcast(meta), "doc_id").select(
+    # filename and extractor_meta ride through the chunker to every chunk
+    chunks = _embed_column(chunk_documents_df(docs), dim=embedding_dim)
+    out = chunks.select(
         F.concat_ws("_", "doc_id", "chunk_index").alias("chunk_id"),
         "doc_id",
         "filename",

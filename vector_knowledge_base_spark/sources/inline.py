@@ -45,7 +45,7 @@ def create_document(
 
     from vector_knowledge_base_spark.functions.text import sanitize_filename
     from vector_knowledge_base_spark.pipeline.chunker import chunk_documents_df
-    from vector_knowledge_base_spark.pipeline.embed import embed_df
+    from vector_knowledge_base_spark.pipeline.embed import _embed_column
 
     doc = _local_df(spark, 
         [(filename, content)], "filename string, text string"
@@ -55,10 +55,8 @@ def create_document(
         "text",
         F.regexp_replace(F.lit(ext), r"^\.", "").alias("lang"),
     )
-    chunks = chunk_documents_df(doc)
-    chunks = embed_df(chunks, dim=embedding_dim)
-    meta = doc.select("doc_id", "filename")
-    return chunks.join(F.broadcast(meta), "doc_id").select(
+    chunks = _embed_column(chunk_documents_df(doc), dim=embedding_dim)
+    return chunks.select(
         F.concat_ws("_", "doc_id", "chunk_index").alias("chunk_id"),
         "doc_id",
         "filename",
@@ -115,7 +113,7 @@ def ingest_jsonl(
     whatever metadata their producer liked."""
     from vector_knowledge_base_spark.functions.text import sanitize_filename
     from vector_knowledge_base_spark.pipeline.chunker import chunk_documents_df
-    from vector_knowledge_base_spark.pipeline.embed import embed_df
+    from vector_knowledge_base_spark.pipeline.embed import _embed_column
 
     raw = spark.read.json(path)
     missing = [c for c in (filename_col, text_col) if c not in raw.columns]
@@ -137,12 +135,8 @@ def ingest_jsonl(
             ).alias("lang"),
         )
     )
-    chunks = chunk_documents_df(
-        doc, id_col="doc_id", text_col="text", lang_col="lang"
-    )
-    chunks = embed_df(chunks, dim=embedding_dim)
-    meta = doc.select("doc_id", "filename")
-    return chunks.join(F.broadcast(meta), "doc_id").select(
+    chunks = _embed_column(chunk_documents_df(doc), dim=embedding_dim)
+    return chunks.select(
         F.concat_ws("_", "doc_id", "chunk_index").alias("chunk_id"),
         "doc_id",
         "filename",

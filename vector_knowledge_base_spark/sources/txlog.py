@@ -776,14 +776,20 @@ def _attach_blooms(
 ) -> None:
     """Build per-file bloom sidecars for ``bloom_cols`` over the given
     freshly-written files and flag each file's stats entry with the
-    indexed columns. One distributed job per column: read ONLY these
-    files, project ONLY the column, hash/explode/aggregate 64-bit words
-    JVM-side (codegen; no UDF), collect words (≤ rows·10/64 per file —
-    a 1M-row file's bloom is ~1.25 MB) and write one immutable sidecar
-    per data file."""
+    indexed columns. One distributed pass over all the columns: read
+    ONLY these files, project ONLY the bloom columns, tag each value
+    with its column, hash/explode/aggregate 64-bit words per (column,
+    file, word) JVM-side (codegen; no UDF, no join: each file's bit
+    count comes from a literal map), collect once (≤ rows·10/64 words
+    per file and column — a 1M-row file's bloom is ~1.25 MB) and write
+    one immutable sidecar per data file. The scan's schema is taken
+    from the footers on the driver, so no schema-inference job runs."""
     import base64
 
     import numpy as np
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import from_arrow_type
 
     per_file: dict[str, dict] = {}
     m_bits: dict[str, int] = {}
@@ -810,59 +816,86 @@ def _attach_blooms(
         per_file[f] = {}
     if not per_file:
         return
-    meta = _local_df(spark, 
-        [(os.path.relpath(os.path.abspath(f), root), m_bits[f])
-         for f in per_file],
-        "_key string, _m long",
+    need = {
+        c: [f for f in per_file if c in _col_list(stats, path, f)]
+        for c in bloom_cols
+    }
+    cols = [c for c in dict.fromkeys(bloom_cols) if need[c]]
+    # each column's type from the footer of one file holding it; a file
+    # written before the column existed reads it as nulls, which add no
+    # bits
+    schema = T.StructType(
+        [
+            T.StructField(
+                c, from_arrow_type(pq.read_schema(need[c][0]).field(c).type)
+            )
+            for c in cols
+        ]
     )
-    for c in bloom_cols:
-        need = [f for f in per_file if c in _col_list(stats, path, f)]
-        if not need:
-            continue
-        # _metadata.file_path is a URI (file:/… or file:///…): strip
-        # the scheme down to a plain absolute path, then take the
-        # suffix after "<table root>/" — exactly the Python-side key.
-        norm = F.regexp_replace(
-            F.col("_metadata.file_path"), r"^[a-zA-Z][a-zA-Z0-9+.\-]*:/+", "/"
+    m_of = F.create_map(
+        *[
+            x
+            for k, f in keys.items()
+            for x in (F.lit(k), F.lit(m_bits[f]).cast("long"))
+        ]
+    )
+    # _metadata.file_path is a URI (file:/… or file:///…): strip the
+    # scheme down to a plain absolute path, then take the suffix after
+    # "<table root>/" — exactly the Python-side key.
+    norm = F.regexp_replace(
+        F.col("_metadata.file_path"), r"^[a-zA-Z][a-zA-Z0-9+.\-]*:/+", "/"
+    )
+    tagged = F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(i).alias("_c"), F.col(c).cast("string").alias("_v")
+                )
+                for i, c in enumerate(cols)
+            ]
         )
-        src = (
-            spark.read.parquet(*need)
-            .select(
-                F.substring(norm, len(root) + 2, 1 << 30).alias("_key"),
-                F.col(c).cast("string").alias("_v"),
-            )
-            .where(F.col("_v").isNotNull())
-            .join(F.broadcast(meta), "_key")
+    )
+    src = (
+        spark.read.schema(schema)
+        .parquet(*per_file)
+        .select(
+            F.substring(norm, len(root) + 2, 1 << 30).alias("_key"),
+            tagged.alias("_t"),
         )
-        h = F.md5(F.col("_v"))
-        h1 = F.conv(F.substring(h, 1, 15), 16, 10).cast("long")
-        h2 = F.conv(F.substring(h, 17, 15), 16, 10).cast("long").bitwiseOR(
-            F.lit(1)
+        .select("_key", "_t._c", "_t._v", m_of[F.col("_key")].alias("_m"))
+        .where(F.col("_v").isNotNull())
+    )
+    h = F.md5(F.col("_v"))
+    h1 = F.conv(F.substring(h, 1, 15), 16, 10).cast("long")
+    h2 = F.conv(F.substring(h, 17, 15), 16, 10).cast("long").bitwiseOR(
+        F.lit(1)
+    )
+    pos = F.explode(
+        F.array(
+            *[(h1 + F.lit(i) * h2) % F.col("_m") for i in range(_BLOOM_K)]
         )
-        pos = F.explode(
-            F.array(
-                *[(h1 + F.lit(i) * h2) % F.col("_m") for i in range(_BLOOM_K)]
-            )
-        ).alias("_pos")
-        words = (
-            src.select("_key", pos)
-            .groupBy("_key", F.expr("_pos DIV 64").alias("_w"))
-            .agg(
-                F.expr(
-                    "bit_or(shiftleft(1L, CAST(_pos % 64 AS INT)))"
-                ).alias("_bits")
-            )
-            .collect()
+    ).alias("_pos")
+    words = (
+        src.select("_c", "_key", pos)
+        .groupBy("_c", "_key", F.expr("_pos DIV 64").alias("_w"))
+        .agg(
+            F.expr(
+                "bit_or(shiftleft(1L, CAST(_pos % 64 AS INT)))"
+            ).alias("_bits")
         )
-        arrays = {
-            f: np.zeros(m_bits[f] // 64, dtype="<u8") for f in need
-        }
-        for r in words:
-            f = keys[r["_key"]]
-            arrays[f][int(r["_w"])] = np.uint64(
-                r["_bits"] & 0xFFFFFFFFFFFFFFFF
-            )
-        for f in need:
+        .collect()
+    )
+    arrays = {
+        (c, f): np.zeros(m_bits[f] // 64, dtype="<u8")
+        for c in cols
+        for f in need[c]
+    }
+    for r in words:
+        arrays[cols[r["_c"]], keys[r["_key"]]][int(r["_w"])] = np.uint64(
+            r["_bits"] & 0xFFFFFFFFFFFFFFFF
+        )
+    for c in cols:
+        for f in need[c]:
             # defense-in-depth (r11, after the multi-partition keying
             # bug): NEVER write an all-zero bloom for a row-carrying
             # file. A zero array means either an all-NULL column
@@ -871,12 +904,14 @@ def _attach_blooms(
             # and silently prune real rows on every probe) — absence
             # of the entry makes the probe abstain, degrading any such
             # regression to no-pruning instead of wrong answers.
-            if not arrays[f].any():
+            if not arrays[c, f].any():
                 continue
             per_file[f][c] = {
                 "m": m_bits[f],
                 "k": _BLOOM_K,
-                "b64": base64.b64encode(arrays[f].tobytes()).decode("ascii"),
+                "b64": base64.b64encode(arrays[c, f].tobytes()).decode(
+                    "ascii"
+                ),
             }
     for f, blooms in per_file.items():
         if not blooms:
