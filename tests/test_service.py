@@ -837,6 +837,55 @@ def test_serve_artifact_is_one_cell_without_kmeans(
     assert kb._serve_artifact()["server"].centroids.shape[0] == 1
 
 
+def test_facade_hybrid_build_counts_from_manifest(spark, tmp_path, monkeypatch):
+    """The facade's hybrid rebuild takes its ``max_docs`` bound from the
+    pinned version's manifest footer sum: on a DV-free table the first
+    ``search_hybrid`` builds with ``DataFrame.count`` raising. After a
+    ``mode="dv"`` update the footer sum is inexact, so the rebuild
+    counts the keyword docs frame again. Answers match the hybrid
+    batch-plan shape on both sides."""
+    from vector_knowledge_base_spark.pipeline.embed import embed_texts
+
+    kb = KnowledgeBase(spark, str(tmp_path / "ws"), storage="txlog")
+    kb.create_document("spark.txt", "vector search spark join", category="eng")
+    kb.create_document("soup.md", "tomato soup basil vector", category="food")
+    kb._serve_artifact()
+    frame = type(kb.chunks())
+    real_count = frame.count
+
+    def no_count(self):
+        raise AssertionError("DataFrame.count ran for the hybrid build")
+
+    def check(term):
+        qv = embed_texts([term], dim=kb.dim)[0].tolist()
+        hyb = kb.search_hybrid(term, k=4)
+        assert [(h["chunk_id"], h["rrf_score"]) for h in hyb] == _plan_rrf(
+            kb.chunks(), term, qv, 4
+        )
+
+    monkeypatch.setattr(frame, "count", no_count)
+    kb.search_hybrid("vector", k=4)
+    monkeypatch.undo()
+    assert kb._hybrid_art.last_refresh_mode == "rebuild"
+    check("vector")
+
+    kb.update_chunks(
+        F.col("filename") == "soup.md", {"category": F.lit("x")}, mode="dv"
+    )
+    counted = []
+
+    def recording_count(self):
+        counted.append(self.columns)
+        return real_count(self)
+
+    monkeypatch.setattr(frame, "count", recording_count)
+    kb.search_hybrid("tomato", k=4)
+    monkeypatch.undo()
+    assert kb._hybrid_art.last_refresh_mode == "rebuild"
+    assert ["chunk_id", "text"] in counted
+    check("tomato")
+
+
 def test_facade_chunks_table_bloom_indexed(spark, tmp_path):
     """r11 (VERDICT r10 #6): the engine's own chunks table is born
     with bloom sidecars on its point-lookup columns — chunk_id (S15

@@ -1506,6 +1506,131 @@ def test_keyword_build_refuses_null_ids(spark):
         HybridKnnServer(docs, knn, id_col="chunk_id")
 
 
+def _synthetic_chunk_id(i):
+    # fixed-width hash part: string order is index order
+    return f"{7_000_000_000_000_000_000 + i}_{i % 7}"
+
+
+def _synthetic_keyword_tables(n_docs, terms_per_doc, n_terms, n_shards=None):
+    """Arrow (dl, postings) tables shaped like ``toArrow()`` of the
+    keyword build frames, with string ids shaped like the facade's
+    ``<doc hash>_<chunk index>`` chunk ids, in a shuffled dl order; doc ``d`` holds terms ``(d + j * n_terms // terms_per_doc)
+    % n_terms``. With ``n_shards`` the tables carry a ``_shard`` column
+    (``d % n_shards``) and postings group by (shard, term)."""
+    import numpy as np
+    import pyarrow as pa
+
+    d = np.arange(n_docs)
+    step = n_terms // terms_per_doc
+    doc = np.repeat(d, terms_per_doc)
+    term = (doc + np.tile(np.arange(terms_per_doc) * step, n_docs)) % n_terms
+    shard = doc % n_shards if n_shards else np.zeros_like(doc)
+    o = np.lexsort((doc, term, shard))
+    doc, term, shard = doc[o], term[o], shard[o]
+    key = shard * n_terms + term
+    starts = np.flatnonzero(np.r_[True, key[1:] != key[:-1]])
+    ids = [_synthetic_chunk_id(i) for i in range(n_docs)]
+    entries = pa.StructArray.from_arrays(
+        [pa.array([ids[i] for i in doc]), pa.array(doc % 3 + 1, pa.int64())],
+        names=["_id", "_c"],
+    )
+    pl = pa.ListArray.from_arrays(
+        pa.array(np.r_[starts, doc.shape[0]], pa.int32()), entries
+    )
+    perm = np.random.default_rng(0).permutation(n_docs)
+    dl_cols = {
+        "_id": pa.array([ids[i] for i in perm]),
+        "_dl": pa.array(np.full(n_docs, terms_per_doc), pa.int32()),
+    }
+    pl_cols = {"_t": pa.array([f"t{t}" for t in term[starts]]), "_pl": pl}
+    if n_shards:
+        dl_cols = {"_shard": pa.array(perm % n_shards, pa.int32()), **dl_cols}
+        pl_cols = {"_shard": pa.array(shard[starts], pa.int32()), **pl_cols}
+    return pa.table(dl_cols), pa.table(pl_cols)
+
+
+def test_keyword_arrow_remap_memory_and_fallback_signal():
+    """The keyword builders remap posting ids to row ranks inside Arrow:
+    over >=100k string-id entries the traced Python/numpy peak stays
+    within 64 bytes per entry (a per-entry ``str`` plus a numpy unicode
+    copy needs ~190), for the single and the sharded builder, and the
+    ranks are right. An unknown posting id and a null entry id raise
+    ``TypeError``, the signal that sends the build to the row path."""
+    import gc
+    import tracemalloc
+
+    import numpy as np
+    import pyarrow as pa
+
+    from vector_knowledge_base_spark.operators.serving import (
+        _keyword_arrays_by_shard_arrow,
+        _keyword_arrays_from_arrow,
+    )
+
+    n_docs, per_doc, n_terms, n_shards = 12_000, 16, 1_600, 3
+    n_entries = n_docs * per_doc
+    step = n_terms // per_doc
+
+    def want_docs(t, s=None):
+        r = (t - np.arange(n_docs)) % n_terms
+        d = np.flatnonzero((r % step == 0) & (r // step < per_doc))
+        return d if s is None else d[d % n_shards == s]
+
+    def traced_peak(fn, *args):
+        gc.collect()
+        tracemalloc.start()
+        try:
+            out = fn(*args)
+            return out, tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+
+    dl_tbl, pl_tbl = _synthetic_keyword_tables(n_docs, per_doc, n_terms)
+    (doc_ids, dl, postings), peak = traced_peak(
+        _keyword_arrays_from_arrow, dl_tbl, pl_tbl
+    )
+    assert peak / n_entries <= 64, f"{peak / n_entries:.0f} B per entry"
+    assert doc_ids.dtype == np.dtype("<U21") and dl.dtype == np.float64
+    assert list(doc_ids[:2]) == [_synthetic_chunk_id(0), _synthetic_chunk_id(1)]
+    for t in (0, 7, n_terms - 1):
+        ri, c = postings[f"t{t}"]
+        assert ri.dtype == np.int64 and c.dtype == np.float64
+        assert np.array_equal(ri, want_docs(t))
+
+    dl_s, pl_s = _synthetic_keyword_tables(n_docs, per_doc, n_terms, n_shards)
+    shards, peak = traced_peak(
+        _keyword_arrays_by_shard_arrow, dl_s, pl_s, n_shards
+    )
+    assert peak / n_entries <= 64, f"{peak / n_entries:.0f} B per entry"
+    for s, (doc_ids, _, postings) in enumerate(shards):
+        assert np.array_equal(
+            doc_ids,
+            [_synthetic_chunk_id(i) for i in range(s, n_docs, n_shards)],
+        )
+        for t in (0, 7, n_terms - 1):
+            ri = postings[f"t{t}"][0]
+            assert np.array_equal(ri, want_docs(t, s) // n_shards)
+
+    # fallback signal: an unknown posting id, then a null entry id
+    dl_tbl, pl_tbl = _synthetic_keyword_tables(40, 4, 8)
+    entries = pl_tbl.column("_pl").combine_chunks()
+    flat = entries.flatten()
+    for bad in ("unknown_0", None):
+        ids = flat.field("_id").to_pylist()
+        ids[5] = bad
+        broken = pa.ListArray.from_arrays(
+            entries.offsets,
+            pa.StructArray.from_arrays(
+                [pa.array(ids, pa.string()), flat.field("_c")],
+                names=["_id", "_c"],
+            ),
+        )
+        with pytest.raises(TypeError):
+            _keyword_arrays_from_arrow(
+                dl_tbl, pl_tbl.set_column(1, "_pl", broken)
+            )
+
+
 def test_allowed_ids_mask_cache_hits_and_stays_exact(spark, emb, server):
     """r14 (VERDICT r13 next-round #4): a repeated-filter session must
     reuse the memoized allow mask — same snapshot, same filter content

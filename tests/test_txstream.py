@@ -551,3 +551,52 @@ def test_consumer_id_persists_admission_floor(spark, tmp_path):
         q.stop()
     assert spark.table("txconsumer").count() == 50
     assert (_load_consumer_floor(src, "e2e") or 0) >= 9
+
+
+def test_caught_up_wait_falls_back_when_offsets_never_parse(monkeypatch):
+    """The restart leg of ``txlog_stream_multihop`` waits for a committed
+    batch's ``endOffset`` to reach the source's latest version. When
+    the offset never parses, the wait hands over to the caller's
+    manifest row-count wait after ``_OFFSET_PARSE_LIMIT`` consecutive
+    failures instead of spinning to its deadline; a parseable offset
+    in between resets the count. Spark-free: fake progress dicts."""
+    from vector_knowledge_base_spark import queries
+
+    monkeypatch.setattr(queries, "_OFFSET_POLL_S", 0.0)
+    monkeypatch.setattr(queries, "_OFFSET_PARSE_LIMIT", 3)
+
+    def progress(*offsets):
+        it = iter(offsets)
+        return lambda: {"sources": [{"endOffset": next(it)}]}
+
+    assert queries._progress_end_version(None) is None
+    assert queries._progress_end_version({"sources": []}) is None
+    assert queries._progress_end_version(
+        {"sources": [{"endOffset": "{'version': 4}"}]}
+    ) == 4
+    with pytest.raises(ValueError):
+        queries._progress_end_version({"sources": [{"endOffset": "None"}]})
+
+    fell_back = []
+
+    def fallback(deadline):
+        fell_back.append(deadline)
+        return "rows"
+
+    deadline = time.time() + 60
+    never = progress(*["{bad"] * 3)
+    assert queries._await_end_version(never, 5, deadline, fallback) == "rows"
+    assert fell_back == [deadline]
+
+    fell_back.clear()
+    flaky = progress(
+        "{bad", "None", "{'version': 2}", "{bad", "{}", "{'version': 5}"
+    )
+    assert queries._await_end_version(flaky, 5, deadline, fallback) is True
+    assert fell_back == []
+
+    stale = lambda: {"sources": [{"endOffset": "{'version': 1}"}]}  # noqa: E731
+    assert queries._await_end_version(
+        stale, 5, time.time() + 0.05, fallback
+    ) is False
+    assert fell_back == []

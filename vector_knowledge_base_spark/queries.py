@@ -14918,6 +14918,54 @@ FROM orders
 """
 
 
+# consecutive unparseable ``endOffset`` reads before the caught-up wait
+# gives up on offsets and falls back to the row-count wait (~5 s of polls)
+_OFFSET_PARSE_LIMIT = 100
+_OFFSET_POLL_S = 0.05
+
+
+def _progress_end_version(progress) -> int | None:
+    """Source end version of a stream's ``lastProgress``; ``None`` while
+    no batch has completed. Python-source offsets surface in progress
+    as the dict's repr (single quotes — not JSON), so ``literal_eval``
+    parses them. Raises ``ValueError`` when the offset does not
+    parse."""
+    import ast
+
+    if not progress or not progress.get("sources"):
+        return None
+    try:
+        end = ast.literal_eval(progress["sources"][0]["endOffset"])
+        return int(end["version"])
+    except (TypeError, ValueError, SyntaxError, KeyError) as e:
+        raise ValueError(f"unparseable stream endOffset: {e!r}") from e
+
+
+def _await_end_version(last_progress, target, deadline, fallback) -> bool:
+    """Poll ``last_progress()`` until a committed batch's end version
+    reaches ``target`` (True) or ``deadline`` passes (False). After
+    ``_OFFSET_PARSE_LIMIT`` consecutive unparseable offsets the offsets
+    are not going to tell, so it returns ``fallback(deadline)`` — the
+    caller's manifest row-count wait — instead of spinning silently to
+    the deadline."""
+    import time
+
+    failures = 0
+    while time.time() < deadline:
+        try:
+            v = _progress_end_version(last_progress())
+        except ValueError:
+            failures += 1
+            if failures >= _OFFSET_PARSE_LIMIT:
+                return fallback(deadline)
+        else:
+            failures = 0
+            if v is not None and v >= target:
+                return True
+        time.sleep(_OFFSET_POLL_S)
+    return False
+
+
 @query("txlog_stream_multihop", oracle=_TXLOG_STREAM_ORACLE)
 def q_txlog_stream_multihop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-hop exactly-once streaming over the txlog, driver-checked
@@ -15025,9 +15073,9 @@ def q_txlog_stream_multihop(spark: SparkSession, sf_dir: str) -> DataFrame:
     # here, not just slower: q.stop() races the live leg's last
     # engine-commit, and the single-batch availableNow run (the Python-
     # source fallback) then only REPLAYS that pending batch, never
-    # reaching wave 4.
-    import ast as _ast
-
+    # reaching wave 4. If the offsets never parse, the wait falls back
+    # to the manifest row-count target instead of spinning to the
+    # deadline.
     q2 = (
         stream_txlog_table(spark, a)
         .writeStream.foreachBatch(txlog_foreach_batch(b))
@@ -15035,23 +15083,13 @@ def q_txlog_stream_multihop(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(processingTime="0 seconds")
         .start()
     )
-    latest_src = _list_versions(a)[-1]
-
-    def _caught_up() -> bool:
-        p = q2.lastProgress
-        if not p or not p.get("sources"):
-            return False
-        try:
-            # Python-source offsets surface in progress as the dict's
-            # repr (single quotes — not JSON); literal_eval parses it
-            end = _ast.literal_eval(p["sources"][0]["endOffset"])
-            return int(end["version"]) >= latest_src
-        except (TypeError, ValueError, SyntaxError, KeyError):
-            return False
-
     try:
-        while _time.time() < deadline and not _caught_up():
-            _time.sleep(0.05)
+        _await_end_version(
+            lambda: q2.lastProgress,
+            _list_versions(a)[-1],
+            deadline,
+            lambda d: _wait(sum(counts), d),
+        )
     finally:
         q2.stop()
     n_src_versions = len(_list_versions(a))

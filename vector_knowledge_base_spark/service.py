@@ -1274,7 +1274,10 @@ class _KnowledgeBaseCore:
             HybridKnnServer,
             append_only_batches,
         )
-        from vector_knowledge_base_spark.sources.txlog import read_table
+        from vector_knowledge_base_spark.sources.txlog import (
+            read_table,
+            stats_rowcount,
+        )
 
         if self.serve_shards > 1:
             # sharded topology (r12): the sharded artifact IS the
@@ -1316,6 +1319,11 @@ class _KnowledgeBaseCore:
             text_col="text",
             max_docs=self.serve_max_rows,
             _table_path=self.chunks_path,
+            # the pinned version's manifest footer sum: no count job;
+            # None (a DV or a missing stat) keeps the count
+            _known_count=stats_rowcount(
+                self.chunks_path, version=art["version"]
+            ),
         )
         h.last_refresh_mode = "rebuild"
         self._hybrid_art = h

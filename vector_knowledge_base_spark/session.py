@@ -11,7 +11,17 @@ session defaults are chosen for the 100 TB design point:
   local[32]; a production job would set this to ~2-3x total cores or let
   AQE coalesce from a higher initial number),
 - broadcast threshold left at default 10 MB — all dimension tables in the
-  star schema (region/nation/supplier/part/customer) are broadcast-size.
+  star schema (region/nation/supplier/part/customer) are broadcast-size,
+- DataFrame-debugging call-site capture off
+  (``spark.python.sql.dataFrameDebugging.enabled=false``): with it on,
+  every ``pyspark.sql.functions`` call walks the Python stack, makes
+  three py4j round trips and retries ``import IPython``/``ipykernel``
+  (~26 MB of driver RSS on first use when IPython is installed). Only
+  the Python call-site line of a DataFrame error's query context is
+  lost; error classes and messages are unchanged. PySpark caches the
+  flag per process on its first wrapped call, so it is a session
+  default here; pass it in ``extra_conf`` as ``"true"`` to turn
+  capture back on.
 """
 
 from __future__ import annotations
@@ -54,6 +64,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
